@@ -350,7 +350,7 @@ def _insert(engine, sql: str) -> tuple[int, "object | None"]:
         )
 
     n = aligned.count()
-    engine._reregister(table, target.unionByName(aligned))
+    engine.register(table, target.unionByName(aligned))
     _track_rowid(engine, table, target, aligned, n)
     if engine._triggers:
         from filesql_spark import triggers as trig
@@ -557,7 +557,7 @@ def _upsert_replace(engine, table, target, aligned, key, returning):
     n = aligned.count()
     incoming, _ = _dedup_by_key(aligned, key, keep="last")
     survivors = target.join(incoming.select(*key).distinct(), key, "left_anti")
-    engine._reregister(table, survivors.unionByName(incoming))
+    engine.register(table, survivors.unionByName(incoming))
     engine._rowid_hwm.pop(table, None)
     _track_rowid(engine, table, target, incoming, n, pk_only=True)
     # SQLite (recursive_triggers OFF, the default the reference inherits):
@@ -574,7 +574,7 @@ def _upsert_nothing(engine, table, target, aligned, key, returning):
     incoming, _ = _dedup_by_key(aligned, key, keep="first")
     inserted = incoming.join(target.select(*key).distinct(), key, "left_anti")
     n = inserted.count()
-    engine._reregister(table, target.unionByName(inserted))
+    engine.register(table, target.unionByName(inserted))
     engine._rowid_hwm.pop(table, None)
     _track_rowid(engine, table, target, inserted, n, pk_only=True)
     # SQLite: OR IGNORE / DO NOTHING fire INSERT triggers only for rows
@@ -641,7 +641,7 @@ def _upsert_update(engine, table, target, aligned, key, rest, returning):
     n_updated = joined.filter(matched).count()
     to_insert = aligned.join(target.select(*key).distinct(), key, "left_anti")
     n_inserted = to_insert.count()
-    engine._reregister(table, updated.unionByName(to_insert))
+    engine.register(table, updated.unionByName(to_insert))
     _track_rowid(engine, table, target, to_insert, n_inserted, pk_only=True)
     if engine._triggers:
         # SQLite: DO UPDATE fires UPDATE triggers on the conflicted rows
@@ -761,7 +761,7 @@ def _update(engine, sql: str) -> tuple[int, "object | None"]:
         assigns[name] = F.when(pred, new_val).otherwise(F.col(name))
 
     n = df.filter(pred).count()
-    engine._reregister(table, df.withColumns(assigns))
+    engine.register(table, df.withColumns(assigns))
     if engine._triggers:
         from filesql_spark import triggers as trig
 
@@ -811,7 +811,7 @@ def _delete(engine, sql: str) -> tuple[int, "object | None"]:
     else:
         pred = F.lit(True)
     n = df.filter(pred).count()
-    engine._reregister(table, df.filter(~pred))
+    engine.register(table, df.filter(~pred))
     engine._rowid_hwm.pop(table, None)
     if engine._triggers:
         from filesql_spark import triggers as trig
@@ -1071,7 +1071,7 @@ def _alter(engine, sql: str) -> int:
                 engine._origins[new] = engine._origins.pop(table)
             if table in engine._rowid_hwm:
                 engine._rowid_hwm[new] = engine._rowid_hwm.pop(table)
-            engine._reregister(new, df)
+            engine.register(new, df)
             return 0
 
     if low.startswith("rename"):
@@ -1094,7 +1094,7 @@ def _alter(engine, sql: str) -> int:
             engine._primary_keys[table] = [
                 new if c == actual else c for c in engine._primary_keys[table]
             ]
-        engine._reregister(table, df.withColumnRenamed(actual, new))
+        engine.register(table, df.withColumnRenamed(actual, new))
         return 0
 
     if low.startswith("add"):
@@ -1150,7 +1150,7 @@ def _alter(engine, sql: str) -> int:
         else:
             col = F.lit(None).cast(ctype if ctype is not None else "string")
             new_df = df.withColumn(name, col)
-        engine._reregister(table, new_df)
+        engine.register(table, new_df)
         return 0
 
     if low.startswith("drop"):
@@ -1168,7 +1168,7 @@ def _alter(engine, sql: str) -> int:
         if actual in engine._primary_keys.get(table, []):
             # SQLite: "error if the column ... is a PRIMARY KEY"
             raise FilesqlError(f"cannot drop PRIMARY KEY column: {name}")
-        engine._reregister(table, df.drop(actual))
+        engine.register(table, df.drop(actual))
         return 0
 
     raise FilesqlError(f"cannot parse ALTER: {sql.strip()[:120]}")

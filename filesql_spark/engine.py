@@ -118,31 +118,33 @@ class Engine:
 
     def load_paths(self, paths: list[str]) -> None:
         """Collect + load every input path (reference Build/Open flow,
-        builder.go:255-344)."""
-        for path in collect_files_from_paths(paths):
-            result = load_file(self.spark, path)
-            self._temp_files.extend(result.temp_files)
-            for name, df in result.tables:
-                if name in self._tables:
-                    # hard error, like stream_processor.go:109-121
-                    raise DuplicateTableError(
-                        f"table {name!r} already exists (from {path})"
-                    )
-                self.register(name, df, origin=path)
+        builder.go:255-344). ``sqlite_master`` is rebuilt once, after the
+        last file, not once per table."""
+        try:
+            for path in collect_files_from_paths(paths):
+                result = load_file(self.spark, path)
+                self._temp_files.extend(result.temp_files)
+                for name, df in result.tables:
+                    if name in self._tables:
+                        # hard error, like stream_processor.go:109-121
+                        raise DuplicateTableError(
+                            f"table {name!r} already exists (from {path})"
+                        )
+                    self._bind(name, df, origin=path)
+        finally:
+            self._refresh_catalog_views()
 
     def register(self, name: str, df: DataFrame, origin: str | None = None) -> None:
+        self._bind(name, df, origin)
+        self._refresh_catalog_views()
+
+    def _bind(self, name: str, df: DataFrame, origin: str | None = None) -> None:
+        """Point ``name`` (table registry and temp view) at ``df``."""
         self._tables[name] = df
         if origin:
             self._origins[name] = origin
         df.createOrReplaceTempView(_view_ident(name))
         self._mark_views_dirty()
-        self._refresh_catalog_views()
-
-    def _reregister(self, name: str, df: DataFrame) -> None:
-        self._tables[name] = df
-        df.createOrReplaceTempView(_view_ident(name))
-        self._mark_views_dirty()
-        self._refresh_catalog_views()
 
     def _mark_views_dirty(self) -> None:
         """A base table changed: registered views re-derive lazily on the

@@ -28,7 +28,13 @@ _ACTIVE: dict[str, DataFrame] = {}
 
 
 def swap_persist(key: str, df: DataFrame) -> DataFrame:
-    """Persist ``df``, releasing whatever frame this ``key`` pinned before."""
+    """Persist ``df``, releasing whatever frame this ``key`` pinned before.
+
+    ``df`` must be deterministic: no ``rand``-style expression and no UDF
+    marked ``asNondeterministic`` anywhere in its plan. Once a later call
+    swaps the key, an earlier call's lazy result recomputes this frame
+    from its plan, and only a deterministic plan recomputes to the values
+    that result was built from."""
     prev = _ACTIVE.pop(key, None)
     if prev is not None:
         try:

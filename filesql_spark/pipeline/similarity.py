@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from filesql_spark.errors import FilesqlError
 from filesql_spark.pipeline.constants import (
     HYPERPLANES_ALL,
     ann_band_bits,
@@ -589,6 +590,9 @@ def pq_fit(
         "pq_fit.q", df.select("vec_id", quantize(F.col(vec_col)).alias("qv"))
     )
     seed = q.orderBy("vec_id").limit(k).select("qv").collect()
+    if not seed:
+        raise FilesqlError("pq_fit needs at least one vector")
+    # fewer than k vectors: each codebook holds one codeword per vector
     books = [
         [list(r.qv[mi * sub_d : (mi + 1) * sub_d]) for r in seed]
         for mi in range(m)
@@ -617,7 +621,7 @@ def pq_fit(
             for row in stats
         }
         books = [
-            [upd.get((mi, c), books[mi][c]) for c in range(k)]
+            [upd.get((mi, c), books[mi][c]) for c in range(len(books[mi]))]
             for mi in range(m)
         ]
     return books

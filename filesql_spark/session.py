@@ -22,6 +22,21 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = max(os.cpu_count() or 8, 8)
+MAX_DRIVER_MEM_GB = 32
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Driver heap for local mode: about half of physical RAM, at least
+    1g and at most ``MAX_DRIVER_MEM_GB``. The JVM's resident size runs
+    well past its heap (metaspace, code cache, off-heap buffers), so a
+    heap near the whole of RAM gets the process killed by the kernel
+    before the JVM ever reports an OutOfMemoryError."""
+    if phys_bytes is None:
+        try:
+            phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, OSError, ValueError):  # no sysconf (Windows)
+            phys_bytes = 8 << 30
+    return f"{max(1, min(MAX_DRIVER_MEM_GB, phys_bytes // 2 >> 30))}g"
 
 
 def get_spark(
@@ -45,7 +60,7 @@ def get_spark(
     # heap starves 32 task threads (and a deep ANTLR parse alone can OOM
     # it — seen in round 10's fuzz corpus). Size it to the machine; on a
     # real cluster the submit config overrides this.
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
 
     b = (
         SparkSession.builder.appName(app_name)

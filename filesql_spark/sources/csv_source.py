@@ -1,10 +1,18 @@
 """CSV / TSV reader (reference: file.go:452-493, stream.go:242-341).
 
-Strategy: ``spark.read.csv`` with an all-string schema (distributed,
-splittable scan — Spark's equivalent of the reference's chunked streaming),
-then our sample-bounded inference pass over the first rows (the reference
-also infers from chunk 1 only, stream.go:285-295), then ``try_cast`` to the
-inferred types (cast failures → NULL, SURVEY §7.4 decision #1).
+Strategy: one driver-side ``csv.reader`` pass reads the header and the
+first ``INFERENCE_ROWS`` records (the reference also infers from chunk 1
+only, stream.go:285-295); the header becomes an explicit all-string schema
+for ``spark.read.csv`` (distributed, splittable scan — Spark's equivalent
+of the reference's chunked streaming), the records feed the sample-bounded
+inference vote, and ``try_cast`` applies the winners (cast failures →
+NULL, SURVEY §7.4 decision #1). Opening a delimited file therefore fires
+no Spark job; each query still scans the file in Spark.
+
+The driver parse follows the Spark read it stands in for: the same
+delimiter, RFC-4180 quoting (doubled-quote escape, quoted embedded
+newlines), blank lines skipped, and empty fields — quoted or not — taken
+as NULL.
 
 Empty-field semantics: Spark yields NULL where the reference keeps ``""``;
 for numeric/datetime columns the observable behavior matches (SQLite's ``''``
@@ -16,10 +24,12 @@ from __future__ import annotations
 
 import csv
 import io
+import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from filesql_spark.errors import DuplicateColumnError, EmptyFileError
 from filesql_spark.inference import ColumnType, infer_schema
@@ -31,20 +41,34 @@ from filesql_spark.sources.compression import (
 from filesql_spark.sources.detect import Compression, FileFormat
 
 INFERENCE_ROWS = 3000  # sampling pool; inference itself caps at 1000/col
+_FIELD_LIMIT = 2**31 - 1  # Spark reads fields of any length (maxCharsPerColumn=-1)
 
 
-def _read_header(path: str, compression: Compression, delimiter: str) -> list[str]:
-    """Parse the first line with real CSV quoting rules (driver-side, bounded)."""
-    with open_reader(path, compression) as f:
-        first = f.read(1 << 20)  # 1 MiB is far beyond any sane header
-    if not first.strip():
-        raise EmptyFileError(f"file is empty: {path}")
-    text = first.decode("utf-8-sig", errors="replace")
-    # feed the whole buffer to csv.reader and take its first *record* — a
-    # splitlines()[0] pre-cut would truncate quoted header fields that
-    # contain embedded newlines, diverging from the multiLine=True data read
-    reader = csv.reader(io.StringIO(text), delimiter=delimiter)
-    header = next(reader, [])
+def _read_head(
+    path: str, compression: Compression, delimiter: str
+) -> tuple[list[str], list[list[str | None]]]:
+    """Parse the header and the first ``INFERENCE_ROWS`` records with real
+    CSV quoting rules (driver-side, bounded by the record count)."""
+    # csv's limit is process-wide and 128 KiB by default: only ever raise it
+    if csv.field_size_limit() < _FIELD_LIMIT:
+        csv.field_size_limit(_FIELD_LIMIT)
+    with open_reader(path, compression) as raw:
+        lines = io.TextIOWrapper(raw, encoding="utf-8-sig", errors="replace", newline="")
+        lead = []  # whitespace-only lines up to the first visible one
+        for line in lines:
+            lead.append(line)
+            if line.strip():
+                break
+        else:
+            raise EmptyFileError(f"file is empty: {path}")
+        # blank lines are skipped (csv yields [] for them), like Spark does
+        records = (
+            r for r in csv.reader(itertools.chain(lead, lines), delimiter=delimiter) if r
+        )
+        header = next(records)
+        sample = [
+            [v or None for v in r] for r in itertools.islice(records, INFERENCE_ROWS)
+        ]
     cleaned = [h.strip() for h in header]
     dupes = {h for h in cleaned if cleaned.count(h) > 1}
     if dupes:
@@ -52,11 +76,12 @@ def _read_header(path: str, compression: Compression, delimiter: str) -> list[st
         raise DuplicateColumnError(
             f"duplicate column names in {os.path.basename(path)}: {sorted(dupes)}"
         )
-    return cleaned
+    return cleaned, sample
 
 
 def apply_inferred_types(df: DataFrame, sample_rows: list[list[str | None]]) -> DataFrame:
-    """Run the reference's inference vote and try_cast the winners."""
+    """Run the reference's inference vote over driver-side sample rows and
+    try_cast the winners."""
     schema = infer_schema(df.columns, sample_rows)
     cols = []
     for name, ctype in schema:
@@ -80,7 +105,7 @@ def read_delimited(
     delete after the engine closes (non-native codecs only).
     """
     delimiter = "\t" if fmt == FileFormat.TSV else ","
-    header = _read_header(path, compression, delimiter)
+    header, sample = _read_head(path, compression, delimiter)
 
     src, tmp = path, None
     if compression not in SPARK_NATIVE_READ:
@@ -89,9 +114,10 @@ def read_delimited(
         src = tmp
 
     raw = (
-        spark.read.option("header", True)
+        # the driver's trimmed header names; Spark still skips the header record
+        spark.read.schema(StructType([StructField(h, StringType()) for h in header]))
+        .option("header", True)
         .option("delimiter", delimiter)
-        .option("inferSchema", False)
         .option("mode", "PERMISSIVE")
         .option("encoding", "UTF-8")
         # RFC-4180 embedded newlines (reference uses encoding/csv which
@@ -105,12 +131,4 @@ def read_delimited(
         .option("escape", '"')
         .csv(src)
     )
-    # normalize header: Spark keeps the BOM and padding; we match the
-    # reference's trimmed names
-    raw = raw.toDF(*header) if len(raw.columns) == len(header) else raw
-
-    sample = [
-        [row[i] for i in range(len(raw.columns))]
-        for row in raw.limit(INFERENCE_ROWS).collect()
-    ]
     return apply_inferred_types(raw, sample), tmp

@@ -10,18 +10,17 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from filesql_spark.errors import DuplicateColumnError, EmptyFileError
-from filesql_spark.inference import infer_schema
+from filesql_spark.inference import infer_schema  # noqa: F401  (wrapped by perfbench's traced mode)
 from filesql_spark.naming import table_name_from_path, xlsx_table_name
-from filesql_spark.sources.compression import (
-    SPARK_NATIVE_READ,
-    decompress_to_temp,
-    open_reader,
+from filesql_spark.sources.compression import decompress_to_temp, open_reader
+from filesql_spark.sources.csv_source import (
+    INFERENCE_ROWS,
+    apply_inferred_types,
+    read_delimited,
 )
-from filesql_spark.sources.csv_source import apply_inferred_types, read_delimited
 from filesql_spark.sources.detect import Compression, FileFormat, detect_file_type
 from filesql_spark.sources.jsonl import read_jsonl
 from filesql_spark.sources.ltsv import read_ltsv
@@ -84,24 +83,11 @@ def load_file(spark: SparkSession, path: str) -> LoadResult:
             _check_dup_columns(header, f"{path}#{sheet_name}")
             schema = StructType([StructField(h, StringType()) for h in header])
             raw = spark.createDataFrame(rows, schema=schema)
-            df = apply_inferred_types_from_rows(raw, header, rows)
+            df = apply_inferred_types(raw, rows[:INFERENCE_ROWS])
             tables.append((xlsx_table_name(path, sheet_name), df))
         return LoadResult(tables)
 
     raise EmptyFileError(f"unreachable format: {fmt}")  # pragma: no cover
-
-
-def apply_inferred_types_from_rows(raw, header, rows):
-    """Inference directly over already-materialized rows (XLSX path)."""
-    sample = rows[:3000]
-    schema = infer_schema(header, sample)
-    cols = []
-    for name, ctype in schema:
-        c = F.col(name)
-        if ctype.spark_type in ("long", "double"):
-            c = F.trim(c).try_cast(ctype.spark_type)
-        cols.append(c.alias(name))
-    return raw.select(*cols)
 
 
 def _check_dup_columns(columns: list[str], origin: str) -> None:

@@ -7,8 +7,15 @@ reference pads ``""``, file.go:548-556).
 Spark-first shape — two distributed passes, mirroring the reference's
 two-pass scan (stream.go:366-391) without its flaw:
 1. key-discovery: parse each line into a map, explode+distinct the keys
-   (a tiny shuffle; result is the schema);
-2. projection: ``map[key]`` per discovered key.
+   (a tiny shuffle; result is the schema) — the one Spark job of an open,
+   kept because a key may first appear anywhere in the file;
+2. projection: ``map[key]`` per discovered key, which each query scans.
+
+The type sample is the first ``INFERENCE_ROWS`` records, read on the driver
+with the same line rule as the Spark parse: split on tab, keep the pieces
+holding a ``:``, key before the first ``:``, value after it, skip lines of
+nothing but spaces. Opening an LTSV file costs the key-discovery job and
+nothing more; each query still scans the file in Spark.
 
 The reference's column order is Go-map-iteration nondeterministic
 (file.go:542-545) — we fix it as sorted-key order (SURVEY A9 decision).
@@ -19,13 +26,39 @@ map_from_entries) — no Python UDF.
 
 from __future__ import annotations
 
+import io
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filesql_spark.errors import EmptyFileError
-from filesql_spark.sources.compression import SPARK_NATIVE_READ, decompress_to_temp
+from filesql_spark.sources.compression import (
+    SPARK_NATIVE_READ,
+    decompress_to_temp,
+    open_reader,
+)
 from filesql_spark.sources.csv_source import INFERENCE_ROWS, apply_inferred_types
 from filesql_spark.sources.detect import Compression
+
+
+def _read_sample(
+    path: str, compression: Compression, keys: list[str]
+) -> list[list[str | None]]:
+    """The first ``INFERENCE_ROWS`` records projected onto ``keys``, parsed
+    by the same rule as the Spark expression in ``read_ltsv``."""
+    rows: list[list[str | None]] = []
+    with open_reader(path, compression) as raw:
+        # universal newlines: Spark's text reader also splits on \n, \r\n, \r
+        for line in io.TextIOWrapper(raw, encoding="utf-8", errors="replace"):
+            line = line.rstrip("\n")
+            if not line.strip(" "):  # Spark's trim strips spaces only
+                continue
+            kv = dict(p.split(":", 1) for p in line.split("\t") if ":" in p)
+            rows.append([kv.get(k) for k in keys])
+            if len(rows) == INFERENCE_ROWS:
+                break
+    return rows
+
 
 def read_ltsv(
     spark: SparkSession, path: str, compression: Compression
@@ -55,8 +88,4 @@ def read_ltsv(
 
     # pass 2: project map lookups into columns
     df = kv.select(*[F.col("kv")[k].alias(k) for k in keys])
-
-    sample = [
-        [row[i] for i in range(len(keys))] for row in df.limit(INFERENCE_ROWS).collect()
-    ]
-    return apply_inferred_types(df, sample), tmp
+    return apply_inferred_types(df, _read_sample(path, compression, keys)), tmp

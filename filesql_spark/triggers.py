@@ -482,7 +482,7 @@ def _body_update(engine, stmt: str, tx: DataFrame) -> None:
     result = joined.select(
         *[assigns.get(c, F.col(c)).alias(c) for c in target.columns]
     )
-    engine._reregister(table, result)
+    engine.register(table, result)
     new_tx = joined.filter(F.col("__hit__").isNotNull()).select(
         F.struct(*[F.col(c).alias(c) for c in target.columns]).alias("old"),
         F.struct(
@@ -512,7 +512,7 @@ def _body_delete(engine, stmt: str, tx: DataFrame) -> None:
         )
     cond = F.expr(dialect.rewrite(rest[5:].strip(), engine._column_types())).cast("boolean")
     doomed = target.join(F.broadcast(tx), cond, "left_semi")
-    engine._reregister(
+    engine.register(
         table, target.join(F.broadcast(tx), cond, "left_anti")
     )
     engine._rowid_hwm.pop(table, None)  # freed rowids: re-count next INSERT

@@ -370,6 +370,24 @@ def test_pq_codebook_shape_and_determinism(emb):
     assert all(len(cw) == 64 // PQ_M for book in a for cw in book)
 
 
+def test_pq_fit_fewer_vectors_than_codewords(emb):
+    """k=16 codewords but only 10 vectors: each codebook holds one codeword
+    per vector (seeded from the vectors themselves) instead of raising a
+    bare IndexError; no vectors at all is a FilesqlError."""
+    from filesql_spark.errors import FilesqlError
+    from filesql_spark.pipeline.similarity import PQ_M, pq_encode, pq_fit
+
+    ten = emb.orderBy("vec_id").limit(10)
+    books = pq_fit(ten)
+    assert len(books) == PQ_M
+    assert all(len(book) == 10 for book in books)
+    codes = pq_encode(ten, books).collect()
+    assert len(codes) == 10
+    assert all(0 <= r[f"code_{mi}"] < 10 for r in codes for mi in range(PQ_M))
+    with pytest.raises(FilesqlError):
+        pq_fit(emb.limit(0))
+
+
 def test_pq_codes_in_range(emb):
     from filesql_spark.pipeline.similarity import PQ_K, pq_encode, pq_fit
 

@@ -165,6 +165,13 @@ def test_empty_file_raises(spark, tmp_path):
         load_file(spark, str(p))
 
 
+def test_whitespace_only_file_raises(spark, tmp_path):
+    p = tmp_path / "ws.csv"
+    p.write_text("  \n\n\t\n")
+    with pytest.raises(EmptyFileError):
+        load_file(spark, str(p))
+
+
 def test_header_only(spark, tmp_path):
     p = tmp_path / "h.csv"
     p.write_text("id,name\n")
@@ -366,3 +373,150 @@ def test_orc_gz_load(spark, tmp_path):
     (name, df), = res.tables
     assert name == "g" and df.count() == 1
     assert res.temp_files  # decompressed through the spill path
+
+
+# ------------------------------------- driver-side open: header + type sample
+#
+# A delimited open reads its header and type sample on the driver and fires
+# no Spark job. The expected types and rows below are what the open inferred
+# when it still sampled through Spark (`limit(3000).collect()`), written as
+# literals: the driver-side read must keep every one of them.
+
+DELIMITED_PARITY = [
+    ("bom.csv", "\ufeffid,name\n1,alpha\n2,beta\n",
+     [("id", "bigint"), ("name", "string")], [(1, "alpha"), (2, "beta")]),
+    ("quoted_header.csv", '"first\nname",age\nann,31\nbo,x\nal,7\n',
+     [("first\nname", "string"), ("age", "string")],
+     [("ann", "31"), ("bo", "x"), ("al", "7")]),
+    ("embedded.csv", 'id,note,js\n1,"line1\nline2","{""k"": 1}"\n2,"say ""hi""",plain\n',
+     [("id", "bigint"), ("note", "string"), ("js", "string")],
+     [(1, "line1\nline2", '{"k": 1}'), (2, 'say "hi"', "plain")]),
+    ("empties.csv", 'a,b,c\n1,"",\n2,,"x"\n,"",3\n4,5,""\n',
+     [("a", "bigint"), ("b", "bigint"), ("c", "string")],
+     [(1, None, None), (2, None, "x"), (None, None, "3"), (4, 5, None)]),
+    ("ragged.csv", "a,b,c\n1,2\n3,4,5,6\n7,8,9\n",
+     [("a", "bigint"), ("b", "bigint"), ("c", "bigint")],
+     [(1, 2, None), (3, 4, 5), (7, 8, 9)]),
+    ("short.tsv", "k\tv\tw\n1\t1.5\t2024-01-02\n2\t2\t2024-02-03\n3\t\t2024-03-04\n",
+     [("k", "bigint"), ("v", "double"), ("w", "string")],
+     [(1, 1.5, "2024-01-02"), (2, 2.0, "2024-02-03"), (3, None, "2024-03-04")]),
+    ("crlf.csv", "a,b\r\n1,x\r\n2,y\r\n",
+     [("a", "bigint"), ("b", "string")], [(1, "x"), (2, "y")]),
+    ("blank_lines.csv", "\n\na,b\n1,2\n\n3,4\n",
+     [("a", "bigint"), ("b", "bigint")], [(1, 2), (3, 4)]),
+]
+
+
+@pytest.mark.parametrize(
+    "fname,text,dtypes,rows", DELIMITED_PARITY, ids=[c[0] for c in DELIMITED_PARITY]
+)
+def test_delimited_open_type_parity(spark, tmp_path, fname, text, dtypes, rows):
+    p = tmp_path / fname
+    p.write_text(text, encoding="utf-8", newline="")
+    (_, df), = load_file(spark, str(p)).tables
+    assert df.dtypes == dtypes
+    assert [tuple(r) for r in df.collect()] == rows
+
+
+def test_delimited_sample_past_one_mib_and_capped_at_3000_rows(spark, tmp_path):
+    """3100 rows of ~420 bytes: ``n`` is empty for rows 1-2900 (the first
+    ~1.2 MiB), an integer for rows 2901-3000 and text after row 3000. The
+    vote must see the integers past 1 MiB and must not see the text past
+    the 3000-row sample, so ``n`` is INTEGER and the late text is NULL."""
+    pad = "x" * 400
+    lines = ["id,n,pad"] + [
+        f"{i},{'' if i <= 2900 else (i if i <= 3000 else 'late')},{pad}"
+        for i in range(1, 3101)
+    ]
+    p = tmp_path / "big.csv"
+    p.write_text("\n".join(lines) + "\n")
+    (_, df), = load_file(spark, str(p)).tables
+    assert df.dtypes == [("id", "bigint"), ("n", "bigint"), ("pad", "string")]
+    rows = [tuple(r)[:2] for r in df.collect()]
+    assert len(rows) == 3100
+    assert rows[2899:2901] == [(2900, None), (2901, 2901)]
+    assert rows[2999:3001] == [(3000, 3000), (3001, None)]
+
+
+def test_delimited_field_longer_than_csv_default_limit(spark, tmp_path):
+    p = tmp_path / "longfield.csv"
+    p.write_text("id,blob\n1," + "z" * 200000 + "\n2,b\n")
+    (_, df), = load_file(spark, str(p)).tables
+    assert df.dtypes == [("id", "bigint"), ("blob", "string")]
+    assert [(r.id, len(r.blob)) for r in df.collect()] == [(1, 200000), (2, 1)]
+
+
+def test_ltsv_driver_sample_parity(spark, tmp_path):
+    """Lines without ``:`` (and a lone tab) are all-NULL records, values
+    keep every ``:`` after the first, an empty value stays '', lines of
+    spaces or nothing are skipped, CRLF ends a line."""
+    p = tmp_path / "kv.ltsv"
+    p.write_bytes(
+        b"a:1\tb:x:y\n\ngarbage\n  \n\tc:2020-01-01\n"
+        b"a:2\tb:\tc:2021-02-03\r\n\t\nd:only\n"
+    )
+    (_, df), = load_file(spark, str(p)).tables
+    assert df.dtypes == [("a", "bigint"), ("b", "string"), ("c", "string"), ("d", "string")]
+    assert [tuple(r) for r in df.collect()] == [
+        (1, "x:y", None, None),
+        (None, None, None, None),
+        (None, None, "2020-01-01", None),
+        (2, "", "2021-02-03", None),
+        (None, None, None, None),
+        (None, None, None, "only"),
+    ]
+
+
+def test_open_delimited_fires_no_spark_job(spark, tmp_path):
+    import pyarrow as pa
+
+    import filesql_spark as fs
+
+    (tmp_path / "a.csv").write_text("id,v\n1,x\n2,y\n")
+    (tmp_path / "b.tsv").write_text("id\tw\n1\t2.5\n")
+    (tmp_path / "c.csv.gz").write_bytes(gzip.compress(b"k,n\n1,2\n3,4\n"))
+    (tmp_path / "d.csv.zst").write_bytes(pa.Codec("zstd").compress(b"z\n7\n", asbytes=True))
+    sc = spark.sparkContext
+    group = "test_open_delimited_fires_no_spark_job"
+    sc.setJobGroup(group, group)
+    try:
+        eng = fs.open(str(tmp_path), spark=spark)
+        opened = len(sc.statusTracker().getJobIdsForGroup(group))
+        total = eng.query("SELECT SUM(n) AS s FROM c").collect()[0].s
+        queried = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    try:
+        assert opened == 0
+        assert total == 6 and queried > 0  # the counter does see jobs
+        assert eng.table_names() == ["a", "b", "c", "d"]
+        assert [dict(eng.table(t).dtypes) for t in ("b", "d")] == [
+            {"id": "bigint", "w": "double"}, {"z": "bigint"},
+        ]
+    finally:
+        eng.close()
+
+
+def test_sqlite_master_after_multi_file_open(spark, tmp_path, monkeypatch):
+    import filesql_spark as fs
+    from filesql_spark.engine import Engine
+
+    rebuilds = []
+    rebuild = Engine._refresh_catalog_views
+    monkeypatch.setattr(
+        Engine, "_refresh_catalog_views", lambda self: rebuilds.append(1) or rebuild(self)
+    )
+    (tmp_path / "bom.csv").write_text("\ufeffid,name\n1,alpha\n", encoding="utf-8")
+    (tmp_path / "short.tsv").write_text("k\tv\tw\n1\t1.5\t2024-01-02\n")
+    (tmp_path / "kv.ltsv").write_text("a:1\tb:x\n\tc:2020-01-01\nd:only\n")
+    with fs.open(str(tmp_path), spark=spark) as eng:
+        rows = eng.query("SELECT * FROM sqlite_master ORDER BY name").collect()
+    assert len(rebuilds) == 1  # once per open, not once per table
+    assert [tuple(r) for r in rows] == [
+        ("table", "bom", "bom", 0, 'CREATE TABLE "bom" ("id" INTEGER, "name" TEXT)'),
+        ("table", "kv", "kv", 0,
+         'CREATE TABLE "kv" ("a" INTEGER, "b" TEXT, "c" TEXT, "d" TEXT)'),
+        ("table", "short", "short", 0,
+         'CREATE TABLE "short" ("k" INTEGER, "v" REAL, "w" TEXT)'),
+    ]
